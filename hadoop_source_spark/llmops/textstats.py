@@ -47,6 +47,21 @@ def token_count_bpe(text: Column) -> Column:
     return F.regexp_count(text, F.lit(BPE_SPLIT_REGEX))
 
 
+def _round6(x: Column) -> Column:
+    """Round a non-negative double to 6 decimals the way the DuckDB oracle
+    does (``round(x, 6)``: half away from zero on the double ``x * 1e6``).
+
+    Spark's ``round`` rounds the double's decimal string instead, and the
+    two disagree on some 6-decimal ties: the double nearest 1371/3200 =
+    0.4284375 is 0.42843749999999997, which Spark rounds to 0.428437, while
+    its product with 1e6 is 428437.5 and DuckDB gives 0.428438. Neither
+    rounds every tie of the exact ratio half-up (DuckDB turns 577/640 =
+    0.9015625 into 0.901562), so this follows the oracle's arithmetic."""
+    y = x * F.lit(1e6)
+    k = F.floor(y)
+    return (k + F.when(y - k >= F.lit(0.5), F.lit(1)).otherwise(F.lit(0))) / F.lit(1e6)
+
+
 def _stats_exprs(text: Column) -> list[Column]:
     """The doc_stats output expressions (aliased), reusable in any select."""
     n_chars = F.length(text)
@@ -70,10 +85,10 @@ def _stats_exprs(text: Column) -> list[Column]:
         n_chars.alias("n_chars"),
         n_tokens.alias("n_tokens"),
         token_count_bpe(text).alias("n_tokens_bpe"),
-        F.round(avg_token_len, 6).alias("avg_token_len"),
-        F.round(alpha_ratio, 6).alias("alpha_ratio"),
-        F.round(punct_ratio, 6).alias("punct_ratio"),
-        F.round(quality, 6).alias("quality"),
+        _round6(avg_token_len).alias("avg_token_len"),
+        _round6(alpha_ratio).alias("alpha_ratio"),
+        _round6(punct_ratio).alias("punct_ratio"),
+        _round6(quality).alias("quality"),
     ]
 
 

@@ -15,6 +15,19 @@ Design notes (100 TB readiness):
 - Session timezone pinned UTC: the reference stores all times as UTC
   millis (FileStatus.mtime, inotify Event timestamps); pinning avoids
   oracle drift between Spark and DuckDB.
+- Python workers start through `hadoop_source_spark.pyworker`
+  (`spark.python.daemon.module`). PySpark's worker calls
+  `importlib.invalidate_caches()` before every task, and on CPython < 3.13
+  that re-reads the zip directory of pyspark.zip, py4j and the spark-core
+  jar: 150-250 ms per Python task on a 4-core host, more than a 1-task JVM
+  job takes in all. The daemon module re-reads an archive only when its
+  mtime or size changed. The package's parent directory goes on
+  `spark.executorEnv.PYTHONPATH` so workers import it from any working
+  directory; the daemon then imports the package `__init__` (and so
+  `pyspark.sql`, about 0.3 s) once per daemon, not per task.
+  Both are static SparkConf: `tune()` cannot apply them to a session
+  created elsewhere, and such sessions keep the per-task cost. Drop the
+  daemon module once every worker runs CPython >= 3.13.
 """
 
 from __future__ import annotations
@@ -22,6 +35,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_DAEMON_MODULE = "hadoop_source_spark.pyworker"
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _cpus() -> int:
@@ -71,6 +87,11 @@ def get_spark(
     carries over.
     """
     n = cpus or _cpus()
+    extra = dict(extra_conf or {})
+    # worker PYTHONPATH: the caller's entries first, then this package's root
+    paths = [p for p in extra.pop("spark.executorEnv.PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in paths:
+        paths.append(_PACKAGE_PARENT)
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
@@ -86,8 +107,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
+        .config("spark.python.daemon.module", _DAEMON_MODULE)
+        .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(paths))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra.items():
         builder = builder.config(k, v)
     return tune(builder.getOrCreate())
 

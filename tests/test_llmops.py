@@ -966,3 +966,38 @@ def test_knn_ivf_agreement(spark):
     assert len(ivf) == len(exact)
     agree = sum(1 for k_ in exact if ivf.get(k_) == exact[k_]) / len(exact)
     assert agree >= 0.9, f"agreement {agree:.3f}"
+
+
+def test_doc_stats_rounds_six_decimal_ties_like_the_oracle(spark):
+    """doc_stats rounds to 6 decimals as its DuckDB oracle does: half away
+    from zero on the double times 1e6. Doc 1 scores 1371/3200 = 0.4284375
+    (8 tokens, 640 chars, 464 letters, 1 punctuation mark); its double is
+    0.42843749999999997, which Spark's round() took to 0.428437 and DuckDB
+    to 0.428438. Doc 2 scores 577/640 = 0.9015625 (95 tokens, 512 chars,
+    418 letters); its double times 1e6 is 901562.4999999999, so both give
+    0.901562, not the exact half-up 0.901563."""
+    import duckdb
+    import pandas as pd
+
+    from hadoop_source_spark import workload
+    from hadoop_source_spark.llmops import textstats as ts
+
+    docs = [
+        (1, " ".join(["a" * 58] * 8) + "." + "0" * 168),
+        (2, " ".join(["abcd"] * 94 + ["a" * 42])),
+        (3, "The cat sat on the mat, twice."),
+        (4, ""),
+    ]
+    got = {
+        r.doc_id: r.asDict()
+        for r in ts.doc_stats(spark.createDataFrame(docs, "doc_id long, text string")).collect()
+    }
+    assert [got[i]["quality"] for i in (1, 2, 4)] == [0.428438, 0.901562, 0.1]
+
+    documents = pd.DataFrame(docs, columns=["doc_id", "text"])  # noqa: F841 (scanned by name)
+    with duckdb.connect() as con:
+        oracle = {r[0]: r for r in con.execute(workload._DOC_STATS_ORACLE).fetchall()}
+    cols = ["doc_id", "n_chars", "n_tokens", "n_tokens_bpe",
+            "avg_token_len", "alpha_ratio", "punct_ratio", "quality"]
+    for doc_id, row in got.items():
+        assert tuple(row[c] for c in cols) == oracle[doc_id], doc_id
