@@ -1,10 +1,14 @@
 """Format/IO layer — the reference's storage containers, Spark-first.
 
-SequenceFile (common/io/SequenceFile.java): Spark ships Hadoop's
-SequenceFile support natively — `write_sequence_file` /
-`read_sequence_file` below are REAL Hadoop-binary-compatible files
-(sc.sequenceFile / rdd.saveAsSequenceFile), not an emulation. A reader of
-the reference's files can hand them to this engine unchanged.
+SequenceFile (common/io/SequenceFile.java): one writer and one reader,
+`write_sequence_file` / `read_sequence_file`, for REAL Hadoop-binary-
+compatible files, not an emulation. A reader of the reference's files
+can hand them to this engine unchanged. The value column's Spark type
+picks its Writable encoding (scalars, MapWritable, index-keyed arrays).
+The reader takes the key/value Writable classes from the file header, as
+the format's schema is fixed per file, and decodes records in the JVM;
+only the write still crosses into Python (Pyrolite cannot unpickle a
+Row JVM-side).
 
 MapFile (common/io/MapFile.java:66-69: sorted data + sparse index): the
 Spark-native equivalent is `write_kv_sorted` — key-range-partitioned,
@@ -25,29 +29,42 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType, DataType, IntegerType, MapType, StructField, StructType,
+)
 
 TEXT_CODECS = {"none", "gzip", "bzip2", "lz4", "deflate", "snappy"}
 PARQUET_CODECS = {"none", "snappy", "gzip", "zstd", "lz4", "uncompressed"}
 
 
-# Writable class ↔ Spark SQL type (SURVEY §1.2 type map). The PySpark
-# Writable converters handle the Java-side boxing both directions.
+_MAP_WRITABLE = "org.apache.hadoop.io.MapWritable"
+_SEQ_OUTPUT_FORMAT = "org.apache.hadoop.mapred.SequenceFileOutputFormat"
+
+# Writable class → the schema types (DataType.typeName) the reader accepts
+# for it, its own type first. The JVM decoder turns a value it cannot
+# convert into NULL without an error, so any other type is rejected before
+# a job starts. string takes the Java toString of every scalar class but
+# BytesWritable (a byte[] prints as its address).
+_READABLE_AS = {
+    "org.apache.hadoop.io.Text": ("string",),
+    "org.apache.hadoop.io.IntWritable": ("integer", "long", "string"),
+    "org.apache.hadoop.io.LongWritable": ("long", "string"),
+    "org.apache.hadoop.io.DoubleWritable": ("double", "string"),
+    "org.apache.hadoop.io.BooleanWritable": ("boolean", "string"),
+    "org.apache.hadoop.io.BytesWritable": ("binary",),
+    _MAP_WRITABLE: ("map", "array"),
+}
+
+# Scalar Writable class → Spark SQL type (SURVEY §1.2 type map).
 # Caveat (Pyrolite boxing): a Python int becomes java Integer when it fits
 # in 32 bits, else Long — so IntWritable is for int-range keys and
 # LongWritable for values beyond 2^31 (mixed-magnitude long columns should
 # write as Text or split; the reader side decodes either class fine).
 WRITABLE_SPARK_TYPE = {
-    "org.apache.hadoop.io.Text": "string",
-    "org.apache.hadoop.io.IntWritable": "int",
-    "org.apache.hadoop.io.LongWritable": "long",
-    "org.apache.hadoop.io.DoubleWritable": "double",
-    "org.apache.hadoop.io.BooleanWritable": "boolean",
-    "org.apache.hadoop.io.BytesWritable": "binary",
+    cls: types[0] for cls, types in _READABLE_AS.items() if cls != _MAP_WRITABLE
 }
-
-_SEQ_OUTPUT_FORMAT = "org.apache.hadoop.mapred.SequenceFileOutputFormat"
 
 
 def write_sequence_file(
@@ -68,150 +85,125 @@ def write_sequence_file(
     :838 createWriter with key/value classes): `compression` picks the
     writer variant (record-compressed / block-compressed), `codec` the
     compression codec, and key/value Writable classes come from the
-    §1.2 type map (Text, Int/Long/Double/Boolean/BytesWritable)."""
-    kt = WRITABLE_SPARK_TYPE[key_class]
-    vt = WRITABLE_SPARK_TYPE[value_class]
-    rdd = df.select(
-        F.col(key_col).cast(kt), F.col(value_col).cast(vt)
-    ).rdd.map(tuple)
-    if compression == "none":
-        rdd.saveAsHadoopFile(path, _SEQ_OUTPUT_FORMAT, key_class, value_class)
-        return
-    if compression not in ("record", "block"):
+    §1.2 type map (Text, Int/Long/Double/Boolean/BytesWritable).
+
+    A map or array value column is written as MapWritable
+    (MapWritable.java:37) whatever `value_class` says: it has the no-arg
+    constructor a reader's ReflectionUtils.newInstance needs, and Spark's
+    converter boxes dict entries per its class-id table (:152). An array
+    becomes {IntWritable index → element}, an array of arrays nested index
+    maps (the TwoDArrayWritable.java:30 analog): ArrayWritable
+    (ArrayWritable.java:46) has NO no-arg constructor, so not even
+    Hadoop's own reader can read it back, and Python cannot define the
+    Java subclass real pipelines write. Any Hadoop reader reads the index
+    maps as MapWritables; `read_sequence_file` gives the arrays back."""
+    if compression not in ("none", "record", "block"):
         raise ValueError(f"compression must be none|record|block, got {compression}")
-    conf = {
-        "mapreduce.output.fileoutputformat.compress": "true",
-        "mapreduce.output.fileoutputformat.compress.type": compression.upper(),
-        "mapreduce.output.fileoutputformat.compress.codec": codec,
-    }
+    vt = df.schema[value_col].dataType
+    if isinstance(vt, (MapType, ArrayType)):
+        value_class, value = _MAP_WRITABLE, _to_index_maps(F.col(value_col), vt)
+    else:
+        value = F.col(value_col).cast(WRITABLE_SPARK_TYPE[value_class])
+    rdd = df.select(
+        F.col(key_col).cast(WRITABLE_SPARK_TYPE[key_class]), value
+    ).rdd.map(tuple)
+    conf = codec_class = None
+    if compression != "none":
+        conf = {
+            "mapreduce.output.fileoutputformat.compress": "true",
+            "mapreduce.output.fileoutputformat.compress.type": compression.upper(),
+            "mapreduce.output.fileoutputformat.compress.codec": codec,
+        }
+        codec_class = codec
     rdd.saveAsHadoopFile(
         path, _SEQ_OUTPUT_FORMAT, key_class, value_class,
-        conf=conf, compressionCodecClass=codec,
+        conf=conf, compressionCodecClass=codec_class,
     )
 
 
 def read_sequence_file(
-    spark: SparkSession, path: str, schema: str = "key string, value string"
+    spark: SparkSession, path: str, schema: str | StructType | None = None
 ) -> DataFrame:
-    """Read a Hadoop SequenceFile into a (key, value) DataFrame. The
-    header's key/value classes + codec drive decoding on the Java side
-    (SequenceFile.Reader.init) — pass `schema` matching the Writable
-    types (see WRITABLE_SPARK_TYPE)."""
-    rdd = spark.sparkContext.sequenceFile(path)
-    return spark.createDataFrame(rdd, schema)
+    """Read a Hadoop SequenceFile into a (key, value) DataFrame.
 
-
-def write_sequence_file_map(
-    df: DataFrame,
-    path: str,
-    key_col: str = "key",
-    value_col: str = "value",
-    key_class: str = "org.apache.hadoop.io.Text",
-) -> None:
-    """Composite-Writable write: a map<k,v> column as REAL MapWritable
-    values (common/io/MapWritable.java:37). Round-trips through any Hadoop
-    SequenceFile reader — MapWritable has the no-arg constructor the
-    reader's ReflectionUtils.newInstance needs, and Spark's Writable
-    converter boxes dict entries to typed Writables per MapWritable's
-    class-id table (MapWritable.java:152 readFields)."""
-    kt = WRITABLE_SPARK_TYPE[key_class]
-    rdd = df.select(
-        F.col(key_col).cast(kt).alias("k"), F.col(value_col).alias("v")
-    ).rdd.map(lambda r: (r.k, dict(r.v)))
-    rdd.saveAsHadoopFile(
-        path, _SEQ_OUTPUT_FORMAT, key_class, "org.apache.hadoop.io.MapWritable"
+    The Writable classes come from the header of the first data file
+    under `path` (SequenceFile.java:838). Without a `schema` they map
+    through WRITABLE_SPARK_TYPE; other classes need one, MapWritable a
+    map, an array or an array of arrays (see `write_sequence_file`). A
+    `schema` type the header class cannot produce raises ValueError
+    before any Spark job runs. Records are decoded in the JVM, never in a
+    Python worker: `sc.sequenceFile`'s Writable conversion, unpickled
+    JVM-side and given the schema the way `createDataFrame` does;
+    index-keyed arrays are rebuilt in SQL."""
+    classes = _header_classes(spark, path)
+    if schema is None:
+        try:
+            schema = "key {}, value {}".format(*(WRITABLE_SPARK_TYPE[c] for c in classes))
+        except KeyError as e:
+            raise ValueError(f"{path}: {e.args[0]} needs a schema") from None
+    struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    if len(struct.fields) != 2:
+        raise ValueError(f"schema needs two fields, got {struct.simpleString()}")
+    for f, cls in zip(struct.fields, classes):
+        accepted = _READABLE_AS.get(cls)
+        if accepted and f.dataType.typeName() not in accepted:
+            raise ValueError(
+                f"{path}: {cls} cannot be read as {f.name} {f.dataType.simpleString()}"
+            )
+    sc = spark.sparkContext
+    pickled = sc._jvm.PythonRDD.sequenceFile(
+        sc._jsc, path, *classes, None, None, min(sc.defaultParallelism, 2), 0
     )
-
-
-def read_sequence_file_map(
-    spark: SparkSession, path: str, schema: str = "key string, value map<string,bigint>"
-) -> DataFrame:
-    """Read MapWritable-valued SequenceFiles back to a map column."""
-    rdd = spark.sparkContext.sequenceFile(path)
-    return spark.createDataFrame(rdd, schema)
-
-
-def write_sequence_file_array(
-    df: DataFrame,
-    path: str,
-    key_col: str = "key",
-    value_col: str = "value",
-    key_class: str = "org.apache.hadoop.io.Text",
-) -> None:
-    """Composite-Writable write for array<T> columns
-    (common/io/ArrayWritable.java:46).
-
-    ArrayWritable itself has NO no-arg constructor, so even Hadoop's own
-    SequenceFile.Reader cannot re-instantiate it reflectively — every real
-    Hadoop pipeline writes a concrete subclass. From Python we cannot
-    define a Java subclass, so we use the interoperable encoding instead:
-    each array becomes a MapWritable of {IntWritable index → element},
-    readable by ANY Hadoop reader as a standard MapWritable (and by
-    ``read_sequence_file_array`` as the original array)."""
-    kt = WRITABLE_SPARK_TYPE[key_class]
-    rdd = df.select(
-        F.col(key_col).cast(kt).alias("k"), F.col(value_col).alias("v")
-    ).rdd.map(lambda r: (r.k, {i: v for i, v in enumerate(r.v)}))
-    rdd.saveAsHadoopFile(
-        path, _SEQ_OUTPUT_FORMAT, key_class, "org.apache.hadoop.io.MapWritable"
+    stored = StructType(
+        [StructField(f.name, _index_map_type(f.dataType)) for f in struct.fields]
     )
+    df = DataFrame(spark._jsparkSession.applySchemaToPythonRDD(
+        sc._jvm.SerDeUtil.pythonToJava(pickled, True).rdd(), stored.json()
+    ), spark)
+    arrays = {f.name: _from_index_maps(df[f.name], f.dataType)
+              for f in struct.fields if isinstance(f.dataType, ArrayType)}
+    return df.withColumns(arrays) if arrays else df
 
 
-def read_sequence_file_array(
-    spark: SparkSession, path: str, schema: str = "key string, value array<bigint>"
-) -> DataFrame:
-    """Read index-keyed MapWritable SequenceFiles back to an array column,
-    restoring element order from the integer keys."""
-    rdd = spark.sparkContext.sequenceFile(path).map(
-        lambda kv: (kv[0], [v for _, v in sorted(kv[1].items())])
+def _header_classes(spark: SparkSession, path: str) -> tuple[str, str]:
+    """(key class, value class) from the first file under `path` whose
+    name does not start with `_` or `.`, as the input format skips them."""
+    sc = spark.sparkContext
+    jvm, conf = sc._jvm, sc._jsc.hadoopConfiguration()
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(conf)
+    data = sorted((st.getPath() for st in fs.listStatus(root) if st.isFile()
+                   and not st.getPath().getName().startswith(("_", "."))), key=str)
+    if not data:
+        raise FileNotFoundError(f"no SequenceFile under {path}")
+    reader = jvm.org.apache.hadoop.io.SequenceFile.Reader(fs, data[0], conf)
+    try:
+        return reader.getKeyClassName(), reader.getValueClassName()
+    finally:
+        reader.close()
+
+
+def _index_map_type(dt: DataType) -> DataType:
+    """Stored type of an array: map<int, element>, nested arrays alike."""
+    if isinstance(dt, ArrayType):
+        return MapType(IntegerType(), _index_map_type(dt.elementType))
+    return dt
+
+
+def _to_index_maps(c: Column, dt: DataType) -> Column:
+    if not isinstance(dt, ArrayType):
+        return c
+    return F.map_from_entries(F.transform(
+        c, lambda x, i: F.struct(i, _to_index_maps(x, dt.elementType))
+    ))
+
+
+def _from_index_maps(c: Column, dt: DataType) -> Column:
+    if not isinstance(dt, ArrayType):
+        return c
+    return F.transform(
+        F.array_sort(F.map_keys(c)), lambda k: _from_index_maps(c[k], dt.elementType)
     )
-    return spark.createDataFrame(rdd, schema)
-
-
-def write_sequence_file_2darray(
-    df: DataFrame,
-    path: str,
-    key_col: str = "key",
-    value_col: str = "value",
-    key_class: str = "org.apache.hadoop.io.Text",
-) -> None:
-    """TwoDArrayWritable analog (common/io/TwoDArrayWritable.java:30) for
-    array<array<T>> columns: nested index-keyed MapWritables
-    ({row → {col → element}}). MapWritable nests cleanly — its per-entry
-    class-id table covers map values, and it has the no-arg constructor
-    ArrayWritable lacks — so the file reads back through any Hadoop
-    SequenceFile reader."""
-    kt = WRITABLE_SPARK_TYPE[key_class]
-    rdd = df.select(
-        F.col(key_col).cast(kt).alias("k"), F.col(value_col).alias("v")
-    ).rdd.map(
-        lambda r: (
-            r.k,
-            {i: {j: x for j, x in enumerate(row)} for i, row in enumerate(r.v)},
-        )
-    )
-    rdd.saveAsHadoopFile(
-        path, _SEQ_OUTPUT_FORMAT, key_class, "org.apache.hadoop.io.MapWritable"
-    )
-
-
-def read_sequence_file_2darray(
-    spark: SparkSession,
-    path: str,
-    schema: str = "key string, value array<array<bigint>>",
-) -> DataFrame:
-    """Read nested index-keyed MapWritables back to array<array<T>>,
-    restoring row/column order from the integer keys."""
-    rdd = spark.sparkContext.sequenceFile(path).map(
-        lambda kv: (
-            kv[0],
-            [
-                [x for _, x in sorted(row.items())]
-                for _, row in sorted(kv[1].items())
-            ],
-        )
-    )
-    return spark.createDataFrame(rdd, schema)
 
 
 def write_kv_sorted(df: DataFrame, path: str, key_col: str = "key",
@@ -219,12 +211,7 @@ def write_kv_sorted(df: DataFrame, path: str, key_col: str = "key",
     """MapFile analog: globally key-sorted parquet. Range partitioning
     gives cross-file key ordering; sortWithinPartitions gives in-file
     order; parquet stats give the sparse index."""
-    parted = (
-        df.repartitionByRange(num_partitions, F.col(key_col))
-        if num_partitions
-        else df.repartitionByRange(F.col(key_col))
-    )
-    parted.sortWithinPartitions(key_col).write.mode("overwrite").parquet(path)
+    _write_range_sorted(df, path, key_col, num_partitions, {})
 
 
 def write_kv_bloom(
@@ -243,22 +230,29 @@ def write_kv_bloom(
     key spaces). The reader needs no code change: Spark's vectorized
     parquet reader consults blooms for pushed-down equality predicates.
     functions/bloom.py remains the QUERY-layer bloom (semi-join
-    reduction); this is the file-format one."""
+    reduction); this is the file-format one.
+
+    `expected_ndv` is the store's total number of distinct keys. Parquet
+    sizes one filter per file, so with `num_partitions` files each filter
+    is sized for ceil(expected_ndv / num_partitions) keys, the share a
+    range-partitioned file holds; without it, for expected_ndv."""
+    ndv = -(-expected_ndv // num_partitions) if num_partitions else expected_ndv
+    _write_range_sorted(df, path, key_col, num_partitions, {
+        f"parquet.bloom.filter.enabled#{key_col}": "true",
+        f"parquet.bloom.filter.expected.ndv#{key_col}": str(ndv),
+    })
+
+
+def _write_range_sorted(df: DataFrame, path: str, key_col: str,
+                        num_partitions: int | None, options: dict) -> None:
     parted = (
         df.repartitionByRange(num_partitions, F.col(key_col))
         if num_partitions
         else df.repartitionByRange(F.col(key_col))
     )
-    (
-        parted.sortWithinPartitions(key_col)
-        .write.mode("overwrite")
-        .option(f"parquet.bloom.filter.enabled#{key_col}", "true")
-        .option(
-            f"parquet.bloom.filter.expected.ndv#{key_col}",
-            str(expected_ndv),
-        )
-        .parquet(path)
-    )
+    parted.sortWithinPartitions(key_col).write.mode("overwrite").options(
+        **options
+    ).parquet(path)
 
 
 def read_kv(spark: SparkSession, path: str) -> DataFrame:
@@ -380,8 +374,9 @@ def cat(spark: SparkSession, path: str, fmt: str | None = None) -> DataFrame:
     supported container, auto-sniffing the format from magic bytes the
     way Display.Text does (:124-164 — gzip/SequenceFile/Avro), falling
     back to extension and directory-listing heuristics. SequenceFile dirs
-    decode to (key, value) text, Avro files to JSON lines — the `-text`
-    behavior."""
+    decode to (key, value) typed by their header (MapWritable values need
+    `read_sequence_file` with a schema), Avro files to JSON lines — the
+    `-text` behavior."""
     if fmt is None:
         p = path.rstrip("/")
         if os.path.isfile(p):

@@ -55,18 +55,18 @@ def register(name: str, oracle: str | None = None, headline: bool = False):
 
 def _overlap(*thunks):
     """Run independent build thunks on a small thread pool (guide §2.6)
-    and return their results in submission order. The first failure
-    propagates as soon as it happens — pending siblings are cancelled
-    (already-running Spark jobs still drain, but the driver does not
-    keep waiting on the slowest build to learn about an error)."""
+    and return their results in submission order. On the first failure
+    pending siblings are cancelled and running ones drain; then the
+    failure of the earliest-submitted failed thunk is raised with its
+    traceback, so the same input always raises the same error."""
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futs = [pool.submit(t) for t in thunks]
-        done, _ = wait(futs, return_when=FIRST_EXCEPTION)
-        for f in done:
-            if f.exception() is not None:
-                pool.shutdown(cancel_futures=True)
-                raise f.exception()
-        return [f.result() for f in futs]
+        wait(futs, return_when=FIRST_EXCEPTION)
+        pool.shutdown(cancel_futures=True)
+    for f in futs:
+        if not f.cancelled() and f.exception() is not None:
+            f.result()
+    return [f.result() for f in futs]
 
 
 # ---------------------------------------------------------------------------

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import re
 import tempfile
 
 import pytest
@@ -74,6 +75,109 @@ def test_sequence_file_typed_block_compressed_round_trip(spark):
         assert got == {i: i * 1.5 for i in range(50)}
 
 
+# value class or composite kind → (the column's DDL type, values)
+_SEQ_VALUES = {
+    "Text": ("string", ["a", "", "ü"]),
+    "IntWritable": ("int", [0, -7, 2**31 - 1]),
+    # past int range, per the Pyrolite caveat in io.py
+    "LongWritable": ("bigint", [2**31, -(2**40), 2**62]),
+    "DoubleWritable": ("double", [1.5, -0.25, 1e300]),
+    "BooleanWritable": ("boolean", [True, False, True]),
+    "BytesWritable": ("binary", [b"\x00\xff", b"", b"x"]),
+    "map": ("map<string,bigint>", [{"a": 1, "b": 2}, {"c": 3}, {}]),
+    # MapWritable index encodings: order must survive, empties included
+    "array": ("array<bigint>", [[3, 1, 2], [10], []]),
+    "array2d": ("array<array<bigint>>", [[[1, 2, 3], [4]], [[], [7, 8]], []]),
+}
+
+
+def _rows(df):
+    return sorted(
+        (tuple(bytes(x) if isinstance(x, bytearray) else x for x in r)
+         for r in df.collect()),
+        key=repr,
+    )
+
+
+@pytest.mark.parametrize("compression", ["none", "record", "block"])
+@pytest.mark.parametrize("case", list(_SEQ_VALUES))
+def test_sequence_file_writable_round_trip(spark, tmp_path, case, compression):
+    """One writer, one reader, every Writable encoding × CompressionType
+    (SequenceFile.java:235). Scalar classes are the key and the value
+    class and read back with the header's types, no schema given;
+    composite values (MapWritable.java:37, ArrayWritable.java:46,
+    TwoDArrayWritable.java:30) need the schema."""
+    ddl, values = _SEQ_VALUES[case]
+    path = str(tmp_path / "seq")
+    if case in ("map", "array", "array2d"):
+        df = spark.createDataFrame(
+            [(f"k{i}", v) for i, v in enumerate(values)], f"key string, value {ddl}"
+        )
+        hio.write_sequence_file(df, path, compression=compression)
+        back = hio.read_sequence_file(spark, path, f"key string, value {ddl}")
+    else:
+        cls = f"org.apache.hadoop.io.{case}"
+        assert cls in hio.WRITABLE_SPARK_TYPE
+        df = spark.createDataFrame([(v, v) for v in values], f"key {ddl}, value {ddl}")
+        hio.write_sequence_file(
+            df, path, key_class=cls, value_class=cls, compression=compression
+        )
+        back = hio.read_sequence_file(spark, path)
+        assert back.dtypes == [("key", ddl), ("value", ddl)]
+    assert _rows(back) == _rows(df)
+
+
+def test_sequence_file_read_decodes_in_the_jvm(spark, kv_df, tmp_path):
+    """The reader relies on private PySpark internals (PythonRDD.sequenceFile,
+    SerDeUtil.pythonToJava, applySchemaToPythonRDD): its plan must hold no
+    PythonRDD node, i.e. no Python worker, and keep sc.sequenceFile's
+    partitioning."""
+    path = str(tmp_path / "seq")
+    hio.write_sequence_file(kv_df, path, compression="block")
+    rdd = hio.read_sequence_file(spark, path)._jdf.queryExecution().toRdd()
+    assert re.search(r"\bPythonRDD\[", rdd.toDebugString()) is None
+    assert rdd.getNumPartitions() == spark.sparkContext.sequenceFile(path).getNumPartitions()
+
+
+def test_sequence_file_schema_mismatch_raises_before_any_job(spark, tmp_path):
+    """The JVM decoder would turn a mismatched value into NULL silently;
+    the header check turns it into a ValueError before any Spark job.
+    None of these schema types can hold an IntWritable key or a
+    DoubleWritable value."""
+    path = str(tmp_path / "seq")
+    df = spark.range(20).select(
+        F.col("id").cast("int").alias("key"), (F.col("id") * 1.5).alias("value")
+    )
+    hio.write_sequence_file(
+        df, path,
+        key_class="org.apache.hadoop.io.IntWritable",
+        value_class="org.apache.hadoop.io.DoubleWritable",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("seq-mismatch", "schema/header mismatch")
+    try:
+        for schema in ("key int, value boolean", "key int, value long",
+                       "key int, value int", "key double, value double",
+                       "key int, value binary"):
+            with pytest.raises(ValueError, match="cannot be read as"):
+                hio.read_sequence_file(spark, path, schema)
+        assert list(sc.statusTracker().getJobIdsForGroup("seq-mismatch")) == []
+        # the group does see jobs: a matching read's action runs one
+        assert hio.read_sequence_file(spark, path, "key long, value string").count() == 20
+        assert list(sc.statusTracker().getJobIdsForGroup("seq-mismatch"))
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    map_path = str(tmp_path / "map")
+    hio.write_sequence_file(
+        spark.createDataFrame([("k", {"a": 1})], "key string, value map<string,bigint>"),
+        map_path,
+    )
+    with pytest.raises(ValueError, match="needs a schema"):
+        hio.read_sequence_file(spark, map_path)
+
+
 def test_kv_sorted_write_is_sorted_and_pruned(spark, kv_df):
     """MapFile analog: global key order across files + stats pruning."""
     with tempfile.TemporaryDirectory() as d:
@@ -123,6 +227,29 @@ def test_kv_bloom_write_carries_bloom_and_answers_lookups(spark):
         assert [(r.key, r.value) for r in probe.collect()] == [(4000, 2000)]
         # absent-but-in-range key: bloom's case; result must be empty
         assert back.filter(F.col("key") == 4001).count() == 0
+
+
+def test_kv_bloom_sized_per_file(spark, tmp_path):
+    """`expected_ndv` is the store's total: with 8 range partitions each
+    file's filter is sized for an eighth of the keys. A filter sized for
+    all 100 000 keys adds about 128 KiB to every file; one sized for its
+    12 500 adds about 16 KiB."""
+    import os
+
+    kv = spark.range(100_000).select(
+        F.col("id").alias("key"), (F.col("id") * 7).alias("value")
+    )
+    plain, bloom = str(tmp_path / "plain"), str(tmp_path / "bloom")
+    hio.write_kv_sorted(kv, plain, "key", num_partitions=8)
+    hio.write_kv_bloom(kv, bloom, "key", expected_ndv=100_000, num_partitions=8)
+
+    def sizes(p):
+        return [os.path.getsize(os.path.join(p, f))
+                for f in sorted(os.listdir(p)) if f.endswith(".parquet")]
+
+    added = [b - a for a, b in zip(sizes(plain), sizes(bloom))]
+    assert len(added) == 8
+    assert all(0 < n <= 32 * 1024 for n in added), added
 
 
 @pytest.mark.parametrize("codec", ["gzip", "bzip2", "lz4", "deflate"])
@@ -337,40 +464,6 @@ def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
         hio.compact_parquet(spark, src, dst, target_bytes=0)
 
 
-def test_sequence_file_map_round_trip(spark):
-    """Composite Writable: map<string,long> column as REAL MapWritable
-    values (MapWritable.java:37) — write → read-back equality."""
-    df = spark.createDataFrame(
-        [("k1", {"a": 1, "b": 2}), ("k2", {"c": 3}), ("k3", {})],
-        "key string, value map<string,bigint>",
-    )
-    with tempfile.TemporaryDirectory() as d:
-        path = f"{d}/seqmap"
-        hio.write_sequence_file_map(df, path)
-        back = hio.read_sequence_file_map(spark, path)
-        assert sorted((r.key, dict(r.value)) for r in back.collect()) == sorted(
-            (r.key, dict(r.value)) for r in df.collect()
-        )
-
-
-def test_sequence_file_array_round_trip(spark):
-    """Composite Writable: array<long> column via the index-keyed
-    MapWritable encoding (ArrayWritable.java:46 has no no-arg ctor, so
-    raw ArrayWritable is unreadable even to Hadoop itself) — order must
-    survive the round trip."""
-    df = spark.createDataFrame(
-        [("k1", [3, 1, 2]), ("k2", [10]), ("k3", [])],
-        "key string, value array<bigint>",
-    )
-    with tempfile.TemporaryDirectory() as d:
-        path = f"{d}/seqarr"
-        hio.write_sequence_file_array(df, path)
-        back = hio.read_sequence_file_array(spark, path)
-        assert sorted((r.key, list(r.value)) for r in back.collect()) == sorted(
-            (r.key, list(r.value)) for r in df.collect()
-        )
-
-
 AVRO_SCHEMA = {
     "type": "record", "name": "Doc", "fields": [
         {"name": "id", "type": "long"},
@@ -414,22 +507,6 @@ def test_cat_sniffs_avro_magic(spark, tmp_path):
     parsed = sorted((_json.loads(v)["id"], _json.loads(v)["name"]) for v in rows)
     assert parsed == [(1, "a"), (2, "b")]
     assert len(rows) == 2
-
-
-def test_sequence_file_2darray_round_trip(spark):
-    """TwoDArrayWritable analog (TwoDArrayWritable.java:30): nested
-    index-keyed MapWritables preserve row/column order exactly."""
-    df = spark.createDataFrame(
-        [("k1", [[1, 2, 3], [4]]), ("k2", [[], [7, 8]]), ("k3", [])],
-        "key string, value array<array<bigint>>",
-    )
-    with tempfile.TemporaryDirectory() as d:
-        path = f"{d}/seq2d"
-        hio.write_sequence_file_2darray(df, path)
-        back = hio.read_sequence_file_2darray(spark, path)
-        assert sorted(
-            (r.key, [list(x) for x in r.value]) for r in back.collect()
-        ) == sorted((r.key, [list(x) for x in r.value]) for r in df.collect())
 
 
 def test_zorder_layout_prunes_2d_box_queries(spark, tmp_path):
